@@ -152,10 +152,17 @@ class EpochStoreBase(MetaStoreBase):
     - ``_SINKS``: sink names (tuple)
     - ``_SINK_BKT``: sink → lookup-bucket partition column (absent =
       the sink has no pruned lookups)
-    - ``_SINK_FOLD_SALT``: bucketed sink → second range-partition key
-      so one oversized bucket spreads across several size-bounded fold
-      files while each task still holds only 1-2 buckets
-    - ``_SINK_SCHEMAS``: sink → empty-seed DDL schema
+    - ``_SINK_FOLD_SALT``: bucketed sink → the column whose hash picks
+      a row's split LANE within its bucket at fold time: a fold that
+      needs ``s`` files per bucket to honor ``target_file_bytes``
+      hash-partitions on ``(bucket, pmod(hash(salt), s))``, so an
+      oversized bucket spreads across ``s`` size-bounded files (buckets
+      are hash-uniform by construction, so one ``s`` fits all of them)
+      and at ``s = 1`` every bucket folds to exactly one file
+    - ``_SINK_SCHEMAS``: sink → DDL of its data columns — the empty
+      seed's schema and, with the partition columns appended
+      (:meth:`read_schema`), the DECLARED schema of every read of the
+      sink, so no read infers it from parquet footers
     - ``_REP_SINK``: the representative (largest) sink whose byte sizes
       drive the incremental fold's LSM full-upgrade decision
     - :meth:`_fold_collapse`: per-sink fold rewrite hook (identity by
@@ -182,6 +189,18 @@ class EpochStoreBase(MetaStoreBase):
     def _sink(self, name: str) -> str:
         return os.path.join(self.base, self.current_generation(), name)
 
+    @classmethod
+    def read_schema(cls, sink: str) -> str:
+        """The sink's declared read schema: its data columns, then the
+        ``batch_id`` partition column and, for a bucketed sink, its
+        lookup-bucket column — the names and types (``int``) partition
+        discovery infers from the directory names, so a declared read
+        returns exactly the columns an inferring read would."""
+        cols = [cls._SINK_SCHEMAS[sink], "batch_id int"]
+        if sink in cls._SINK_BKT:
+            cols.append(f"{cls._SINK_BKT[sink]} int")
+        return ", ".join(cols)
+
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         """Manifest-aware read of one sink's full accumulated state
         (`operators/segman`): an incremental fold CARRIES earlier fold
@@ -191,7 +210,9 @@ class EpochStoreBase(MetaStoreBase):
         physically-present partitions."""
         if name not in self._SINKS:
             raise ValueError(f"unknown sink {name!r}; one of {self._SINKS}")
-        return segman.read_table(spark, self.fs, self._sink(name))
+        return segman.read_table(
+            spark, self.fs, self._sink(name), schema=self.read_schema(name)
+        )
 
     def _fold_collapse(self, sink: str, df: DataFrame) -> DataFrame:
         """Fold-time rewrite hook for one sink's covered epoch range —
@@ -212,7 +233,7 @@ class DedupIngestStore(EpochStoreBase):
     _SINKS = ("decisions", "bands_idx", "counts", "docstore", "hwm")
     # lookup-key bucket column per sink (absent = no pruned lookups)
     _SINK_BKT = {"bands_idx": "bkt", "counts": "bkt", "docstore": "dbkt"}
-    # range-partition salt per bucketed sink (see EpochStoreBase)
+    # fold split-lane column per bucketed sink (see EpochStoreBase)
     _SINK_FOLD_SALT = {
         "bands_idx": "doc_id",
         "counts": "band_key",
@@ -265,8 +286,11 @@ def _seed_sink(
     spark: SparkSession, gen_dir: str, sink: str, layout: type[EpochStoreBase]
 ) -> None:
     """Seed a sink with an empty ``batch_id=-1`` partition (nested under
-    a zero bucket for the bucketed sinks) so root reads discover the
-    partition columns before the first epoch lands."""
+    a zero bucket for the bucketed sinks) so the sink directory exists
+    and holds a readable partition before the first epoch lands. Init
+    seeds every sink; a fold seeds only a sink it would otherwise leave
+    with no partition at all, physical or referenced (see
+    :func:`_compact_into_new_generation`)."""
     sub = os.path.join(gen_dir, sink, "batch_id=-1")
     bkt_col = layout._SINK_BKT.get(sink)
     if bkt_col:
@@ -339,6 +363,7 @@ def _prior(
     bkt_col: str | None = None,
     touched: list[int] | None = None,
     fs: fsio.Fs | None = None,
+    schema: str | None = None,
 ) -> DataFrame:
     """Committed state as of epoch ``eid``: partition-pruned to
     ``batch_id < eid`` so a replayed epoch never sees its own
@@ -351,10 +376,11 @@ def _prior(
     — the missed-duplicates failure mode this module exists to
     prevent. Reads are manifest-aware (`operators/segman`): after an
     incremental fold, earlier fold partitions live in older generations
-    by reference."""
-    df = segman.read_table(spark, fs or fsio.default_fs(path), path).filter(
-        F.col("batch_id") < F.lit(int(eid))
-    )
+    by reference. ``schema`` is the sink's declared read schema
+    (:meth:`EpochStoreBase.read_schema`), which every epoch passes."""
+    df = segman.read_table(
+        spark, fs or fsio.default_fs(path), path, schema=schema
+    ).filter(F.col("batch_id") < F.lit(int(eid)))
     drop = ["batch_id"]
     if bkt_col is not None:
         if touched is None:
@@ -389,7 +415,7 @@ def _write_epoch(
     spark.sql.shuffle.partitions-worth of empty scheduler slots on the
     per-batch hot path. ``n_bkt=0`` with a bucket column means the
     caller already laid the rows out (the compaction fold's
-    range-partitioning) — write as-is."""
+    hash split) — write as-is."""
     w = df
     if bkt_col is not None and n_bkt > 0:
         w = w.repartition(int(n_bkt), F.col(bkt_col))
@@ -416,6 +442,16 @@ def _publish_epoch_sinks(
     overwrites every sink from scratch — recovery holds from ANY subset
     of completed publishes, not just sequential prefixes (pinned in
     tests/test_dedup_index.py::test_replay_from_arbitrary_sink_subset).
+
+    DIRECT epochs have no checkpoint to replay them, and a crash in
+    this wave can leave any subset of their sinks written too. Their
+    recovery is: retry the same eid; the watermark committed first.
+    The watermark row is published before the wave, and the retry's
+    guard reads only watermark rows with ``batch_id < eid`` — so the
+    crashed attempt's own row does not refuse its retry, while a later
+    epoch can never reuse the crashed epoch's ids. The retry then
+    statically overwrites every sink (pinned in
+    tests/test_dedup_index.py::test_direct_retry_after_torn_publish_equals_clean_run).
 
     ``fail_after=<sink>`` (the crash-injection hook) SUBMITS only the
     canonical prefix through that sink, awaits it, then raises — the
@@ -481,13 +517,13 @@ def _guarded_epoch_stats(
 
     Stores created BEFORE the hwm sink existed have no ``hwm`` dir:
     treated as 'no committed watermark' (enforcement begins with this
-    epoch's write, which creates the sink; the next fold seeds it into
+    epoch's write, which creates the sink; the next fold folds it into
     the layout like any sink)."""
     spark = exploded.sparkSession
     if store.fs.exists(hwm_path):
-        prior_wm = _prior(spark, hwm_path, eid, fs=store.fs).agg(
-            F.max("max_doc_id").alias("_wm")
-        )
+        prior_wm = _prior(
+            spark, hwm_path, eid, fs=store.fs, schema=store.read_schema("hwm")
+        ).agg(F.max("max_doc_id").alias("_wm"))
     else:
         prior_wm = spark.sql("SELECT CAST(NULL AS BIGINT) AS _wm")
     err = F.concat(
@@ -545,21 +581,20 @@ def _publish_watermark_row(
 ) -> None:
     """Publish the epoch's guarded doc-id watermark — the value
     :func:`_guarded_epoch_stats` already validated in-plan — as the
-    standard per-epoch static-overwrite partition. The write is a
-    1-row LocalTableScan job (no batch scan: the fused stats action
-    paid that once); replay safety falls out of the epoch machinery —
-    the value is a pure function of the batch, so a crash-replay
+    standard per-epoch static-overwrite partition. The one-row frame is
+    built in the JVM (a one-partition ``range``), so the write is one
+    single-task job with no Python rows to ship and no batch scan (the
+    fused stats action paid that once). Replay safety falls out of the
+    epoch machinery — the value is a pure function of the batch, so a crash-replay
     republishes the identical row, and a deliberate rebuild-from-source
     replay (``allow_refolded_replay=True``) sees only watermark rows
     with ``batch_id < eid``, which after a fold is empty, so it passes
     vacuously — exactly mirroring the prior-state view its data reads
     get."""
-    _write_epoch(
-        spark.createDataFrame([(int(wm),)], "max_doc_id long"),
-        hwm_path,
-        eid,
-        None,
+    row = spark.range(1, numPartitions=1).select(
+        F.lit(int(wm)).cast("long").alias("max_doc_id")
     )
+    _write_epoch(row, hwm_path, eid, None)
 
 
 def dedup_ingest_batch(
@@ -762,7 +797,10 @@ def _dedup_ingest_batch_locked(
         # touched (bucket, epoch)) — the bands index itself is never
         # aggregated here, and the sidecar scan prunes to touched bkts
         prior_counts = (
-            _prior(s, sink["counts"], eid, "bkt", touched, fs=store.fs)
+            _prior(
+                s, sink["counts"], eid, "bkt", touched, fs=store.fs,
+                schema=store.read_schema("counts"),
+            )
             .groupBy("band", "band_key")
             .agg(F.max("n").alias("prior_n"))
         )
@@ -777,7 +815,10 @@ def _dedup_ingest_batch_locked(
         # prior bands scan prunes to the batch's buckets: any prior row
         # that can equi-join a batch row on (band, band_key) has the
         # same bkt by construction, so pruning loses no candidate
-        prior_bands = _prior(s, sink["bands_idx"], eid, "bkt", touched, fs=store.fs)
+        prior_bands = _prior(
+            s, sink["bands_idx"], eid, "bkt", touched, fs=store.fs,
+            schema=store.read_schema("bands_idx"),
+        )
         all_bands = prior_bands.unionByName(capped.drop("bkt"))
         cand = (
             capped.drop("bkt")
@@ -807,7 +848,8 @@ def _dedup_ingest_batch_locked(
         # only — per-batch verify compute is O(candidates), and the
         # prior doc-store scan prunes to the partners' buckets
         texts = _prior(
-            s, sink["docstore"], eid, "dbkt", partner_bkts, fs=store.fs
+            s, sink["docstore"], eid, "dbkt", partner_bkts, fs=store.fs,
+            schema=store.read_schema("docstore"),
         ).unionByName(batch.select("doc_id", "text"))
         ver = verify_jaccard(cand, texts, threshold=tau)
         wv = W.partitionBy("doc_b").orderBy("doc_a")
@@ -1032,10 +1074,9 @@ def compact_dedup_ingest_store(
     ``batch_id < eid`` prior-filter still covers the folded partition.
     Bucketed sinks keep their bucket partitioning (the fold
     must stay prunable) and split each bucket into ~``target_file_bytes``
-    range-partitioned files, so the compacted floor is one file per
-    occupied bucket and no bucket ever folds through a single task
-    regardless of its accumulated size. Holds the store's
-    single-writer lock (shared with
+    hash-split files, so the compacted floor is one file per occupied
+    bucket and an oversized bucket splits across several tasks. Holds
+    the store's single-writer lock (shared with
     :func:`run_dedup_ingest_stream`'s drain) so a compaction can never
     supersede a generation a live micro-batch is writing into. A crash
     mid-compaction leaves an unpublished orphan generation, GC'd on the
@@ -1130,6 +1171,10 @@ def _compact_into_new_generation(
     `operators/segman`) — move by MANIFEST REFERENCE: one small write
     per sink, zero data bytes on every scheme (VERDICT r11 #1; the r10
     design hardlinked locally and byte-copied on linkless stores).
+    A sink the fold leaves with no partition — nothing folded, nothing
+    carried — gets an empty seed partition (:func:`_seed_sink`); every
+    other sink skips that write job, so a fold generation carries no
+    empty seed files.
     ``report`` (default: follow the CALLER's ``full``) controls the
     per-sink file-count listing — a recursive walk the drain's hot path
     must not pay, even when a fold self-upgrades."""
@@ -1191,10 +1236,11 @@ def _compact_into_new_generation(
         hi = max(committed, default=-1)
         fold_ids = [e for e in committed if lo < e <= hi]
         dst = os.path.join(gen_dir, sink)
-        if fold_ids and hi >= 0:
+        folded = bool(fold_ids) and hi >= 0
+        if folded:
             bkt_col = store._SINK_BKT.get(sink)
             df = (
-                segman.read_table(spark, fs, src)
+                segman.read_table(spark, fs, src, schema=store.read_schema(sink))
                 .filter(
                     (F.col("batch_id") > F.lit(lo))
                     & (F.col("batch_id") <= F.lit(hi))
@@ -1211,16 +1257,19 @@ def _compact_into_new_generation(
                 df = df.repartition(int(n_out))
                 _write_epoch(df, dst, hi, None)
             else:
-                # honor target_file_bytes for bucketed sinks too: range-
-                # partition on (bucket, salt) so an oversized bucket
-                # spans several tasks/files while small buckets still
-                # fold to one file each
-                n_tasks = max(int(n_out), store.n_bkt)
-                df = df.repartitionByRange(
-                    n_tasks, F.col(bkt_col), F.col(store._SINK_FOLD_SALT[sink])
+                # honor target_file_bytes for bucketed sinks too: hash-
+                # split every bucket into ``lanes`` size-bounded files
+                # by the salt column's hash. Buckets are hash-uniform by
+                # construction, so one lane count fits all of them; at
+                # lanes == 1 each bucket lands whole in one task — one
+                # file per occupied bucket. A hash partitioning needs no
+                # sampling job (a range partitioning ran one per sink)
+                lanes = -(-int(n_out) // store.n_bkt)
+                lane = F.pmod(
+                    F.hash(F.col(store._SINK_FOLD_SALT[sink])), F.lit(lanes)
                 )
+                df = df.repartition(store.n_bkt * lanes, F.col(bkt_col), lane)
                 _write_epoch(df, dst, hi, bkt_col, n_bkt=0)
-        _seed_sink(spark, gen_dir, sink, type(store))
         # prior incremental-fold partitions (ids <= lo; this fold covers
         # only (lo, hi]) and crashed in-flight epochs above the
         # committed high-water carry BY REFERENCE — the replay's static
@@ -1234,15 +1283,20 @@ def _compact_into_new_generation(
         }
         if refs:
             segman.write_manifest(fs, dst, refs, merge="shadow", reuse_from=src)
+        elif not folded:
+            # nothing folded and nothing carried: seed the sink so the
+            # new generation still holds it (the one case that needs a
+            # write job for no data)
+            _seed_sink(spark, gen_dir, sink, type(store))
         n_files = None
         if report:
             # LOGICAL file count — physical partitions plus carried
             # references (a physical-only listing would under-report a
             # sink whose in-flight epoch carried by reference). The
             # refs just written are in hand and can never collide with
-            # the physical partitions (e <= lo or e > hi vs hi and the
-            # seed), so no manifest read-back is needed; referenced
-            # dirs are listed ONCE per segment parent (not once per
+            # the physical partitions (e <= lo or e > hi vs hi), so no
+            # manifest read-back is needed; referenced dirs are listed
+            # ONCE per segment parent (not once per
             # partition) and attributed by the delimiter-safe
             # "/batch_id=e/" path component — never by comparing
             # rendered absolute URIs.

@@ -247,13 +247,34 @@ class Fs:
         ``listFiles`` iterator costs two py4j round trips PER FILE —
         ~2 s for a few-hundred-file index on the driver hot path
         (measured dominating the versioned compaction's no-op check) —
-        where ``os.walk`` is microseconds. Paths render in the same
-        fully-qualified ``file:`` form the Hadoop iterator returns, so
-        consumers see identical strings on either path."""
+        where ``os.walk`` is microseconds. The walk lists what
+        ``listFiles`` lists, in the same strings: the root is made
+        absolute (Hadoop resolves a relative path against its working
+        directory) and rendered in the fully-qualified ``file:`` form,
+        and symlinked directories are followed. One guard goes beyond
+        Hadoop, whose iterator loops on a symlink cycle: a directory
+        already on the current descent path is not entered again."""
         if self.is_local:
-            root = self.local_path(path)
+            root = os.path.abspath(self.local_path(path))
             out_l: list[tuple[str, int]] = []
-            for d, _dirs, files in os.walk(root):
+            # (st_dev, st_ino) of each walked dir's ancestors, itself
+            # included: a dir whose identity is already on its own
+            # descent path closes a symlink cycle
+            chains: dict[str, frozenset] = {root: frozenset()}
+            for d, dirs, files in os.walk(root, followlinks=True):
+                chain = chains.pop(d)
+                try:
+                    st = os.stat(d)
+                except OSError:  # raced deletion: match listFiles' skip
+                    dirs[:] = []
+                    continue
+                key = (st.st_dev, st.st_ino)
+                if key in chain:
+                    dirs[:] = []
+                    continue
+                chain = chain | {key}
+                for sub in dirs:
+                    chains[os.path.join(d, sub)] = chain
                 for name in files:
                     p = os.path.join(d, name)
                     try:

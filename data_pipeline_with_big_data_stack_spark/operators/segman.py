@@ -410,6 +410,7 @@ def read_table(
     fs: fsio.Fs,
     table_dir: str,
     logicals: set[str] | None = None,
+    schema: str | None = None,
 ) -> DataFrame:
     """Read a generation table, manifest-aware. A plain physical dir
     (no manifest) is exactly ``spark.read.parquet(table_dir)`` — the
@@ -418,6 +419,13 @@ def read_table(
     referenced group (grouped by physical parent, scanned with
     ``basePath`` so partition columns and pruning survive) and unions
     by name.
+
+    ``schema`` (a DDL string naming the data AND partition columns) is
+    the table's declared read schema: every scan — the physical read
+    and each referenced group — takes it instead of inferring one, so
+    no scan launches Spark's one-task footer-inference job. Stores
+    whose layout fixes the columns (`operators/dedup_ingest`'s
+    ``EpochStoreBase``) always pass it; ``None`` infers per scan.
 
     ``logicals`` (optional, a set of partition dir names like
     ``cell_id=5``) restricts REFERENCE resolution to those partitions:
@@ -430,9 +438,12 @@ def read_table(
     resolution — reusing the already-read root manifest and listing —
     so a probe of an absent partition stays an empty result, never an
     error (parity with the unrestricted read + filter)."""
+    def _reader():
+        return spark.read if schema is None else spark.read.schema(schema)
+
     raw = _read_manifest_raw(fs, table_dir)
     if raw is None:
-        return spark.read.parquet(table_dir)
+        return _reader().parquet(table_dir)
     names = _listing(fs, table_dir)
 
     def _reads(man: dict) -> list[DataFrame]:
@@ -440,7 +451,7 @@ def read_table(
         if any("=" in n for n in names) or any(
             n.endswith(".parquet") for n in names
         ):
-            reads.append(spark.read.parquet(table_dir))
+            reads.append(_reader().parquet(table_dir))
         whole: list[str] = []
         grouped: dict[str, list[str]] = {}
         for logical, dirs in resolve_refs(fs, table_dir, man, names=names).items():
@@ -450,10 +461,10 @@ def read_table(
                 else:
                     grouped.setdefault(os.path.dirname(d), []).append(d)
         for d in sorted(whole):
-            reads.append(spark.read.parquet(d))
+            reads.append(_reader().parquet(d))
         for base, dirs in sorted(grouped.items()):
             reads.append(
-                spark.read.option("basePath", base).parquet(*sorted(dirs))
+                _reader().option("basePath", base).parquet(*sorted(dirs))
             )
         return reads
 

@@ -113,7 +113,7 @@ class SubstringIngestStore(EpochStoreBase):
     _INIT_FN = "init_substring_store"
     _SINKS = ("decisions", "windows_idx", "hwm")
     _SINK_BKT = {"windows_idx": "bkt"}
-    # second fold range-key: the independent second hash lane spreads
+    # fold split-lane column: the independent second hash lane spreads
     # an oversized bucket across size-bounded files uniformly
     _SINK_FOLD_SALT = {"windows_idx": "w2"}
     _SINK_SCHEMAS = {
@@ -255,7 +255,8 @@ def _substring_ingest_batch_locked(
             if fail_after == "hwm":
                 raise RuntimeError("injected crash after hwm write")
         prior = _prior(
-            spark, sink["windows_idx"], eid, "bkt", touched, fs=store.fs
+            spark, sink["windows_idx"], eid, "bkt", touched, fs=store.fs,
+            schema=store.read_schema("windows_idx"),
         )
         firsts = (
             c.groupBy("w1", "w2", "bkt")
@@ -383,7 +384,7 @@ def compact_substring_ingest_store(
     epochs of each sink into the highest committed ``batch_id``
     partition of a NEW generation (windows_idx keeps its bucket
     partitioning — the fold must stay prunable — split into
-    ~``target_file_bytes`` range-partitioned files), carry crashed
+    ~``target_file_bytes`` hash-split files), carry crashed
     in-flight epochs by manifest reference, publish with one atomic
     pointer flip, GC with one grace predecessor. Holds the store's
     writer lock. ``full=False`` runs one incremental fold (the drain's

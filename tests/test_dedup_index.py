@@ -249,15 +249,15 @@ def test_compact_dedup_ingest_store_preserves_contents(spark):
         sink: len(table_files(spark, getattr(store, sink)))
         for sink in before
     }
-    # bucketed sinks fold via repartitionByRange(n_tasks, bkt, salt):
-    # every task writes one file per bucket it holds, and a range
-    # boundary can split a bucket across two tasks — ≤ n_bkt + n_tasks
-    # files (n_tasks == n_bkt at this size) + 1 seed
+    # bucketed sinks fold via a hash split on (bkt, salt lane): at this
+    # size there is one lane per bucket, so every bucket lands whole in
+    # one task and folds to exactly one file — ≤ n_bkt files (+1 for
+    # any seed partition)
     floor = {
         "decisions": 2,
-        "bands_idx": 2 * store.n_bkt + 1,
-        "counts": 2 * store.n_bkt + 1,
-        "docstore": 2 * store.n_bkt + 1,
+        "bands_idx": store.n_bkt + 1,
+        "counts": store.n_bkt + 1,
+        "docstore": store.n_bkt + 1,
     }
     new_counts = DI.compact_dedup_ingest_store(spark, store)
     for sink, want in before.items():
@@ -321,12 +321,12 @@ def test_batch_passes_touched_buckets_to_every_prior_read(spark, tmp_path, monke
     calls = []
     real = DI._prior
 
-    def spy(s, path, eid, bkt_col=None, touched=None, fs=None):
+    def spy(s, path, eid, bkt_col=None, touched=None, fs=None, schema=None):
         calls.append(
             (os.path.basename(os.path.normpath(path)), bkt_col,
              None if touched is None else len(touched))
         )
-        return real(s, path, eid, bkt_col, touched, fs=fs)
+        return real(s, path, eid, bkt_col, touched, fs=fs, schema=schema)
 
     monkeypatch.setattr(DI, "_prior", spy)
     store = DI.init_dedup_ingest_store(spark, str(tmp_path / "st"))
@@ -887,3 +887,50 @@ def test_replay_from_arbitrary_sink_subset(spark, monkeypatch):
     monkeypatch.setattr(DI, "_publish_epoch_sinks", orig)
     DI.run_dedup_ingest_stream(spark, src, store)
     assert _snapshot(spark, store) == ref, "diverged after non-prefix crash"
+
+
+def test_direct_retry_after_torn_publish_equals_clean_run(spark, tmp_path, monkeypatch):
+    """Direct-call twin of test_replay_from_arbitrary_sink_subset.
+    Direct epochs (no checkpoint) also publish their data sinks
+    concurrently, after the watermark row has committed, so a crash can
+    leave any subset of sinks written. Epoch 1 here commits only a
+    NON-prefix subset (counts + docstore, not decisions/bands_idx) and
+    raises; retrying the same eid directly must leave every sink —
+    watermark included — equal to a clean run of the same batches."""
+    docs = _small_docs(spark)
+    bounds = [0, 50, 100, 150, 200]
+    batches = [
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
+
+    def snap(store):
+        out = _snapshot(spark, store)
+        out["hwm"] = sorted(tuple(r) for r in store.read(spark, "hwm").collect())
+        return out
+
+    clean = DI.init_dedup_ingest_store(spark, str(tmp_path / "clean"))
+    for eid, b in enumerate(batches):
+        DI.dedup_ingest_batch(b, eid, clean)
+    ref = snap(clean)
+
+    store = DI.init_dedup_ingest_store(spark, str(tmp_path / "torn"))
+    orig = DI._publish_epoch_sinks
+
+    def torn(writes, fail_after, defer=frozenset()):
+        orig([w for w in writes if w[0] in ("counts", "docstore")], None)
+        raise RuntimeError("simulated mid-wave crash")
+
+    DI.dedup_ingest_batch(batches[0], 0, store)
+    monkeypatch.setattr(DI, "_publish_epoch_sinks", torn)
+    with pytest.raises(RuntimeError, match="simulated mid-wave crash"):
+        DI.dedup_ingest_batch(batches[1], 1, store)
+    monkeypatch.setattr(DI, "_publish_epoch_sinks", orig)
+
+    def has_epoch_1(sink):
+        return store.read(spark, sink).filter("batch_id = 1").count() > 0
+
+    assert has_epoch_1("counts") and not has_epoch_1("bands_idx")
+    for eid in (1, 2, 3):  # same-eid retry, then the rest
+        DI.dedup_ingest_batch(batches[eid], eid, store)
+    assert snap(store) == ref, "direct retry diverged after a torn publish"

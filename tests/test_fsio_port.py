@@ -492,3 +492,63 @@ def test_ann_versioned_lifecycle_split_manifests_on_simulated_object_store(
     test_ann_versioned_lifecycle_on_simulated_object_store(
         spark, tmp_path, simulated_object_store
     )
+
+
+def test_local_walk_listing_equals_hadoop_listfiles(spark, tmp_path, monkeypatch):
+    """The native ``os.walk`` branch of ``file_sizes_recursive`` must
+    return exactly what the Hadoop ``listFiles`` iterator returns — the
+    listings feed the IVF-PQ serve-cache staleness token, so a missing
+    file or a differently rendered path would serve a stale cache.
+    Pinned on a relative root, on a tree holding a symlinked directory
+    and a symlinked file, and on a symlinked root."""
+    t = tmp_path / "t"
+    (t / "real" / "sub").mkdir(parents=True)
+    (t / "other").mkdir()
+    (t / "real" / "a.bin").write_bytes(b"x" * 3)
+    (t / "real" / "sub" / "b.bin").write_bytes(b"x" * 5)
+    (t / "other" / "c.bin").write_bytes(b"x" * 7)
+    os.symlink(t / "real", t / "other" / "link")
+    os.symlink(t / "real" / "a.bin", t / "other" / "flink")
+    os.symlink(t / "real", t / "rootlink")
+    # Hadoop resolves a relative path against the JVM's working
+    # directory: run the comparison from there
+    jvm_cwd = spark._jvm.System.getProperty("user.dir")
+    monkeypatch.chdir(jvm_cwd)
+    fs = fsio.Fs(spark, str(t))
+    assert fs.is_local
+
+    def both(path):
+        local = sorted(fs.file_sizes_recursive(path))
+        fs.is_local = False
+        try:
+            hadoop = sorted(fs.file_sizes_recursive(path))
+        finally:
+            fs.is_local = True
+        return local, hadoop
+
+    for path in (
+        os.path.relpath(t / "real", jvm_cwd),
+        str(t / "other"),
+        str(t / "rootlink"),
+        "file:" + str(t / "other"),
+        str(t / "missing"),
+    ):
+        local, hadoop = both(path)
+        assert local == hadoop, path
+    local, _ = both(str(t / "other"))
+    assert len(local) == 4  # c.bin, flink, link/a.bin, link/sub/b.bin
+
+
+def test_local_walk_stops_at_symlink_cycle(spark, tmp_path):
+    """A symlink that points back up the tree would make the walk
+    descend forever; the local listing enters no directory that is
+    already on its own descent path, so every real file is listed once
+    per non-cyclic path and the walk ends."""
+    t = tmp_path / "t"
+    (t / "sub").mkdir(parents=True)
+    (t / "a.bin").write_bytes(b"x" * 3)
+    (t / "sub" / "b.bin").write_bytes(b"x" * 5)
+    os.symlink(t, t / "sub" / "up")
+    fs = fsio.Fs(spark, str(t))
+    got = sorted(p for p, _n in fs.file_sizes_recursive(str(t)))
+    assert got == [f"file:{t}/a.bin", f"file:{t}/sub/b.bin"]
